@@ -147,6 +147,11 @@ object Bench {
     // caller that records it next to the wall sample.
     var lastRunCpuS: Double = -1.0
     var lastRunTaskCpuS: Double = -1.0
+    // Generated classes compiled during the run (cache misses only)
+    // and their compile seconds: a warm pass that recompiles shows
+    // here (DESIGN.md "Generated-class reuse").
+    var lastRunCompiles: Long = 0L
+    var lastRunCompileS: Double = 0.0
     // Plan-inspection slots, refreshed per run (see cpu_race_flags):
     // multi-consumer caches in the final plan, and — checked BEFORE
     // execution, when it is meaningful — the ones unmaterialized at
@@ -161,6 +166,7 @@ object Bench {
       TaskMetricsProbe.drain(spark)
       val tm0 = taskMetrics.snapshot()
       val c0 = BenchCore.processCpuSeconds()
+      val (cg0, cgNs0) = BenchCore.codegenCounters()
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, dir)
@@ -178,6 +184,9 @@ object Bench {
         val c1 = BenchCore.processCpuSeconds()
         lastRunCpuS = if (c0 < 0 || c1 < 0) -1.0 else c1 - c0
         val wall = (System.nanoTime() - t0) / 1e9
+        val (cg1, cgNs1) = BenchCore.codegenCounters()
+        lastRunCompiles = cg1 - cg0
+        lastRunCompileS = (cgNs1 - cgNs0) / 1e9
         TaskMetricsProbe.drain(spark)
         lastRunTaskCpuS = (taskMetrics.snapshot() - tm0).cpuS
         // occurrence count is stable across execution; checked outside
@@ -187,6 +196,8 @@ object Bench {
       } catch { case _: Throwable =>
         lastRunCpuS = -1.0
         lastRunTaskCpuS = -1.0
+        lastRunCompiles = -1L
+        lastRunCompileS = -1.0
         -1.0
       }
     }
@@ -231,6 +242,15 @@ object Bench {
     // exactly when the master forks executors).
     val taskCpuSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
+    // Codegen compiles and compile seconds, same positional alignment.
+    val compilesSoFar = collection.mutable.LinkedHashMap[String, Vector[Long]]()
+      .withDefaultValue(Vector.empty)
+    val compileSSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
+      .withDefaultValue(Vector.empty)
+    def recordCodegen(name: String): Unit = {
+      compilesSoFar(name) = compilesSoFar(name) :+ lastRunCompiles
+      compileSSoFar(name) = compileSSoFar(name) :+ lastRunCompileS
+    }
     val multiUse = collection.mutable.LinkedHashMap[String, Boolean]()
       .withDefaultValue(false)
     val unpinned = collection.mutable.LinkedHashMap[String, Seq[String]]()
@@ -254,6 +274,7 @@ object Bench {
           seeded += name
           cpuSoFar(name) = Vector(lastRunCpuS)
           taskCpuSoFar(name) = Vector(lastRunTaskCpuS)
+          recordCodegen(name)
           recordDiagnostics(name)
         }
         Some(name -> t)
@@ -273,6 +294,7 @@ object Bench {
       samplesSoFar(name) = samplesSoFar.getOrElse(name, Vector.empty) :+ sec
       cpuSoFar(name) = cpuSoFar(name) :+ lastRunCpuS
       taskCpuSoFar(name) = taskCpuSoFar(name) :+ lastRunTaskCpuS
+      recordCodegen(name)
       if (sec >= 0) recordDiagnostics(name)
       persistPartial()
       sec
@@ -469,6 +491,15 @@ object Bench {
     val cpuTaskPasses = queries.map { case (name, _) =>
       "\"" + name + "\":[" + taskCpuSoFar(name).map(c => BenchCore.jnum(c, 3)).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    // Per-pass codegen compiles and compile seconds, aligned exactly
+    // like cpu_passes (-1 for a failed run). Nonzero entries after
+    // the first are warm passes recompiling.
+    val compilePasses = queries.map { case (name, _) =>
+      "\"" + name + "\":[" + compilesSoFar(name).mkString(",") + "]"
+    }.mkString("{", ",", "}")
+    val compileSPasses = queries.map { case (name, _) =>
+      "\"" + name + "\":[" + compileSSoFar(name).map(c => BenchCore.jnum(c, 3)).mkString(",") + "]"
+    }.mkString("{", ",", "}")
     // The q84-class race, machine-visible (r16 verdict #4): queries
     // whose warm CPU passes spread >1.5x (gap >5s) WITH a
     // multi-consumer cache in the plan. Since pinCaches runs in every
@@ -507,7 +538,7 @@ object Bench {
         s""""local_mb":${BenchCore.jnum(tmTotal.localShuffleBytes / 1048576.0, 1)},""" +
         s""""tasks":${tmTotal.tasks}}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","master":${BenchCore.jstr(master)},"queries":$qs,"passes":$ps,"spread":$spreads,"cpu":$cpuMin,"cpu_passes":$cpuPasses,"cpu_task":$cpuTaskMin,"cpu_task_passes":$cpuTaskPasses$rerunsField$truncatedField$failedField$raceField$unpinnedField$shuffleField,"sf":"$sfDir"$sf1Section}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","master":${BenchCore.jstr(master)},"queries":$qs,"passes":$ps,"spread":$spreads,"cpu":$cpuMin,"cpu_passes":$cpuPasses,"cpu_task":$cpuTaskMin,"cpu_task_passes":$cpuTaskPasses,"codegen_compiles":$compilePasses,"codegen_compile_s":$compileSPasses$rerunsField$truncatedField$failedField$raceField$unpinnedField$shuffleField,"sf":"$sfDir"$sf1Section}"""
     println(json)
     // The console line can be lost to log-tail truncation (one line per
     // 114 queries is long); persist the identical JSON where the driver

@@ -41,6 +41,14 @@ object BenchCore {
       case _ => -1.0
     }
 
+  /** Spark's JVM-wide codegen counters: (classes compiled, compile
+    * nanoseconds). Both move only on a class-cache miss, so a delta
+    * around a run is the classes that run had to compile.
+    */
+  def codegenCounters(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
   /** Locale-independent fixed-decimal rendering for the bench JSON.
     * The f-interpolator uses the JVM default locale, so under e.g.
     * de_DE the decimal separator becomes ',' and the artifact is

@@ -22,6 +22,12 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionDefaults {
 
+  /** Size of Spark's JVM-wide generated-class cache: the distinct
+    * classes one full 174-query pass compiles, with 2× headroom
+    * (measured working set in DESIGN.md "Generated-class reuse").
+    */
+  val CodegenCacheEntries: Int = 5000
+
   /** The engine's SQL-conf set for a deploy profile — pure and
     * unit-testable without building a session (SessionDefaultsSpec
     * asserts both profiles).
@@ -76,7 +82,25 @@ object SessionDefaults {
     // bounded_rank_top_k) resolve, and the rank-limit rewrite turns
     // the SQL row_number idiom into the bounded-heap aggregate — the
     // same plan contract the Column API gets.
-    val base = Map("spark.sql.extensions" -> "graft.plans.GraftExtensions")
+    //
+    // The three codegen entries make a warm query reuse the classes
+    // its earlier runs compiled (DESIGN.md "Generated-class reuse"):
+    //  - cache size: at Spark's default of 100 entries, LRU eviction
+    //    drops a query's classes before the query comes round again;
+    //  - artifact isolation off: every persist() builds its cache under
+    //    a cloned session with a new UUID, and with isolation on the
+    //    cache-build tasks get a fresh classloader, which misses the
+    //    cache even for byte-identical code. The engine adds no
+    //    session artifacts;
+    //  - no stage id in the class name: AQE numbers whole-stage codegen
+    //    stages in completion order, so an identical body would be
+    //    ...Stage6 in one run and ...Stage7 in the next (plans still
+    //    print `*(n)`).
+    val base = Map(
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.codegen.useIdInClassName" -> "false")
     val tuned =
       if (isLocalProfile(profile)) Map(
         "spark.sql.adaptive.coalescePartitions.enabled" -> "false",

@@ -179,7 +179,4 @@ object BlackScholes {
   def binomialImpliedVol(isCall: Boolean, price: Double, s: Double,
       k: Double, t: Double, r: Double, q: Double, steps: Int = 100): Double =
     impliedVol(price, sigma => binomialPrice(isCall, s, k, t, r, q, sigma, steps))
-
-  /** Year-fraction time distance (Organizers.py:131 `time_distance_helper`). */
-  def yearFraction(days: Double): Double = days / 365.0
 }

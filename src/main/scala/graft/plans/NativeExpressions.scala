@@ -1361,10 +1361,7 @@ case class TermCounts(child: Expression, targets: Array[String])
       }
       i += 1
     }
-    val boxed = new Array[Any](out.length)
-    var t = 0
-    while (t < out.length) { boxed(t) = out(t); t += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(boxed)
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override protected def nullSafeEval(input: Any): Any =

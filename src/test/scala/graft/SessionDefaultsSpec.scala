@@ -53,6 +53,22 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(c("spark.sql.adaptive.coalescePartitions.minPartitionNum") == "16")
   }
 
+  test("both profiles carry the generated-class reuse entries") {
+    for (profile <- Seq("local", "cluster")) {
+      val c = SessionDefaults.profileConfigs(profile, env = Map.empty)
+      assert(c("spark.sql.codegen.cache.maxEntries") ==
+        SessionDefaults.CodegenCacheEntries.toString, profile)
+      assert(c("spark.sql.artifact.isolation.enabled") == "false", profile)
+      assert(c("spark.sql.codegen.useIdInClassName") == "false", profile)
+    }
+  }
+
+  test("the live session has artifact isolation off") {
+    // on, every persist()'s cloned session gave its cache-build tasks a
+    // fresh classloader, and each one recompiled cached classes
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+  }
+
   test("an unknown profile fails loudly instead of inheriting bench-box knobs") {
     val e = intercept[IllegalArgumentException](
       SessionDefaults.profileConfigs("prod", env = Map.empty))
