@@ -113,16 +113,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val master = SessionDefaults.master(cpus)
-    val spark = SessionDefaults.masterConfigs(master).foldLeft(
-      SessionDefaults(SparkSession.builder()
-        .master(master))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.session(cpus, master)
     // Deployment-independent CPU attribution (and shuffle-transport
     // evidence) via task metrics — see TaskMetricsProbe for why the
     // process clock alone is blind under a forked-executor master.

@@ -61,9 +61,11 @@ object BenchCore {
 
   /** Full JSON string escape — backslash, quote, and ALL control
     * chars (<0x20). Cache names in the bench artifact are abbreviated
-    * plan strings, which can carry tabs or odd literals; a partial
-    * escaper here would make the whole artifact unparseable (the
-    * failure class Verify.scala's escaper documents).
+    * plan strings, which can carry tabs or odd literals, and
+    * [[Verify]]'s `oracle_sql.json` carries hand-written SQL; a partial
+    * escaper would make either file unparseable (for the oracle file,
+    * the driver's json.load fails and the round's correctness is
+    * silently zero).
     */
   def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""

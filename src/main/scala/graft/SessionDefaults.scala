@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared session hygiene + the engine's plan-critical defaults,
-  * applied by every entry point (tests, [[Verify]], [[Bench]]).
+  * applied by every entry point (tests, [[Verify]], [[Bench]],
+  * [[Probe]]).
   *
   * Hygiene: Derby — the embedded Hive-metastore database — and the
   * SQL warehouse both live under `target/`, so a test or bench run
@@ -232,7 +233,7 @@ object SessionDefaults {
 
   /** Delete this session's reliable-checkpoint residue, then stop it —
     * the shutdown path for every entry point (Bench, Verify, the
-    * probe mains). `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * [[Probe]] modes). `spark.cleaner.referenceTracking.cleanCheckpoints`
     * only deletes a superseded checkpoint's files when the driver GCs
     * the RDD reference, so a long-lived driver accumulates loop-round
     * files under `spark.checkpoint.dir` between GCs and keeps the
@@ -256,24 +257,54 @@ object SessionDefaults {
       ()
     }
 
-  def apply(b: SparkSession.Builder): SparkSession.Builder = {
+  /** The entry points' whole session recipe as one pure map: the
+    * profile set, the shuffle width pinned to the core count, UTC, no
+    * UI, whatever `master` needs, then the caller's `extra` (which
+    * wins). Bench, Verify, the [[Probe]] modes and the test session
+    * all build through [[session]], so none of them can drift.
+    */
+  def sessionConfigs(cpus: String, master: String,
+      extra: Map[String, String] = Map.empty,
+      env: Map[String, String] = sys.env): Map[String, String] =
+    profileConfigs(env) ++ Map(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false") ++ masterConfigs(master, env) ++ extra
+
+  /** Get or create the session [[sessionConfigs]] describes, logging
+    * at WARN.
+    */
+  def session(cpus: String, master: String,
+      extra: Map[String, String] = Map.empty): SparkSession = {
+    val spark = configure(hygiene(SparkSession.builder().master(master)),
+      sessionConfigs(cpus, master, extra)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Hygiene plus the profile set, on a caller-built builder. */
+  def apply(b: SparkSession.Builder): SparkSession.Builder =
+    configure(hygiene(b), profileConfigs())
+
+  private def configure(b: SparkSession.Builder,
+      confs: Map[String, String]): SparkSession.Builder =
+    confs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  private def hygiene(b: SparkSession.Builder): SparkSession.Builder = {
     val derby = new java.io.File("target/derby")
     derby.mkdirs()
     System.setProperty("derby.system.home", derby.getAbsolutePath)
-    profileConfigs().foldLeft(
-      b.config("spark.sql.warehouse.dir",
+    b.config("spark.sql.warehouse.dir",
         new java.io.File("target/spark-warehouse").toURI.toString)
-        // Reliable-checkpoint home for [[graft.operators.Checkpoints]]
-        // (the cluster profile's executor-loss-tolerant lineage cut —
-        // the r18 chaos finding). Valid here because every
-        // local-cluster executor shares this filesystem; a multi-NODE
-        // deployment overrides it with a DFS path. The cleaner conf
-        // lets superseded loop-round checkpoints delete their files
-        // once the driver GCs the RDD reference.
-        .config("spark.checkpoint.dir",
-          new java.io.File("target/checkpoints").toURI.toString)
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")) {
-      case (bb, (k, v)) => bb.config(k, v)
-    }
+      // Reliable-checkpoint home for [[graft.operators.Checkpoints]]
+      // (the cluster profile's executor-loss-tolerant lineage cut —
+      // the r18 chaos finding). Valid here because every
+      // local-cluster executor shares this filesystem; a multi-NODE
+      // deployment overrides it with a DFS path. The cleaner conf
+      // lets superseded loop-round checkpoints delete their files
+      // once the driver GCs the RDD reference.
+      .config("spark.checkpoint.dir",
+        new java.io.File("target/checkpoints").toURI.toString)
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
   }
 }

@@ -2,12 +2,14 @@ package graft
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.{Success, TaskKilled}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerExecutorAdded, SparkListenerExecutorRemoved, SparkListenerSpeculativeTaskSubmitted, SparkListenerStageSubmitted, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 
-/** Executor-side metric aggregation for the bench: CPU and shuffle
-  * transport bytes summed over every COMPLETED task, snapshotted at
-  * query boundaries.
+/** The one listener in the engine's tooling. For the bench: CPU and
+  * shuffle transport bytes summed over every COMPLETED task,
+  * snapshotted at query boundaries. For the [[Probe]] fault modes:
+  * task, stage, executor and migrated-block counts.
   *
   * Why it exists: [[BenchCore.processCpuSeconds]] reads THIS JVM's
   * process clock, which attributes all plan compute only while the
@@ -32,7 +34,33 @@ final class TaskMetricsProbe extends SparkListener {
   private val localShuffleB = new LongAdder
   private val tasks = new LongAdder
 
+  // Scheduler and block-manager evidence for the fault modes of
+  // [[Probe]]: read with `.sum()` after a [[TaskMetricsProbe.drain]].
+  val tasksStarted, tasksEnded, tasksFailed, tasksKilled,
+    speculativeLaunched, speculatableMarked, stageReattempts,
+    executorsAdded, executorsRemoved,
+    shuffleBlocksMigrated, rddBlocksMigrated = new LongAdder
+
+  /** `rdd_*` block updates count as migrated only after this instant:
+    * plain caching posts the same event class, so the fence opens
+    * when a decommission signal is about to be sent. It is read on
+    * listener PROCESSING time, so bus lag can leak a few pre-signal
+    * cache events past it; the count is reported, never guarded on.
+    */
+  @volatile var rddFenceNanos: Long = Long.MaxValue
+
+  override def onTaskStart(e: SparkListenerTaskStart): Unit = {
+    tasksStarted.increment()
+    if (e.taskInfo.speculative) speculativeLaunched.increment()
+  }
+
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+    tasksEnded.increment()
+    e.reason match {
+      case Success => ()
+      case _: TaskKilled => tasksFailed.increment(); tasksKilled.increment()
+      case _ => tasksFailed.increment()
+    }
     val m = e.taskMetrics
     if (m != null) {
       cpuNs.add(m.executorCpuTime)
@@ -41,6 +69,44 @@ final class TaskMetricsProbe extends SparkListener {
       localShuffleB.add(m.shuffleReadMetrics.localBytesRead)
       tasks.add(1L)
     }
+  }
+
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+    if (e.stageInfo.attemptNumber() > 0) stageReattempts.increment()
+
+  override def onSpeculativeTaskSubmitted(e: SparkListenerSpeculativeTaskSubmitted): Unit =
+    speculatableMarked.increment()
+
+  override def onExecutorAdded(e: SparkListenerExecutorAdded): Unit =
+    executorsAdded.increment()
+
+  override def onExecutorRemoved(e: SparkListenerExecutorRemoved): Unit =
+    executorsRemoved.increment()
+
+  /** Shuffle data/index blocks are tracked by the MapOutputTracker
+    * and never reported to the BlockManager master in normal
+    * execution; the only writer of a `shuffle_*` block update is a
+    * decommissioning BlockManager handing its files to a peer.
+    */
+  override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+    val id = e.blockUpdatedInfo.blockId.name
+    if (id.startsWith("shuffle_")) shuffleBlocksMigrated.increment()
+    else if (id.startsWith("rdd_") && System.nanoTime() > rddFenceNanos)
+      rddBlocksMigrated.increment()
+  }
+
+  /** Drain, then zero every counter and close the rdd fence: the
+    * drain keeps a previous pass's late events out of the next
+    * pass's evidence.
+    */
+  def reset(s: SparkSession): Unit = {
+    TaskMetricsProbe.drain(s)
+    Seq(cpuNs, runMs, remoteShuffleB, localShuffleB, tasks,
+      tasksStarted, tasksEnded, tasksFailed, tasksKilled,
+      speculativeLaunched, speculatableMarked, stageReattempts,
+      executorsAdded, executorsRemoved,
+      shuffleBlocksMigrated, rddBlocksMigrated).foreach(_.reset())
+    rddFenceNanos = Long.MaxValue
   }
 
   def snapshot(): TaskMetricsProbe.Snap = TaskMetricsProbe.Snap(

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,20 +12,11 @@ object Verify {
     // GRAFT_MASTER support (SessionDefaults.master): the multi-executor
     // attestation reruns this SAME dump under local-cluster, proving
     // the oracle-green results hold across real executor boundaries.
-    val master = SessionDefaults.master(cpus)
-    val spark = SessionDefaults.masterConfigs(master).foldLeft(
-      SessionDefaults(SparkSession.builder()
-        .master(master))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        // NOTE: default INT96 parquet timestamps are intentional — they
-        // read back as tz-naive values matching the DuckDB oracle's
-        // naive timestamps; TIMESTAMP_MICROS would add a UTC tz
-        // annotation and break value comparison.
-        .config("spark.ui.enabled", "false")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // NOTE: default INT96 parquet timestamps are intentional — they
+    // read back as tz-naive values matching the DuckDB oracle's naive
+    // timestamps; TIMESTAMP_MICROS would add a UTC tz annotation and
+    // break value comparison.
+    val spark = SessionDefaults.session(cpus, SessionDefaults.master(cpus))
     // Fail LOUDLY before any query runs if the driver regenerated the
     // testdata with different column types (the Aug-13 drift cost 39
     // queries one silent analysis error at a time).
@@ -58,20 +48,8 @@ object Verify {
       // blocks don't accumulate across the 50+ query dumps
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${BenchCore.jstr(k)}: ${BenchCore.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     SessionDefaults.stopAndReap(spark)
   }

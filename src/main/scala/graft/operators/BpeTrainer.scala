@@ -72,7 +72,7 @@ object BpeTrainer {
 
   /** One training round's instrumentation ([[learn]]'s `onRound`):
     * the probe surface for the vocab-scale measurement
-    * (BpeScaleProbe → SCALE_PROBE.md) — per-round wall must stay FLAT
+    * (`graft.Probe bpe` → SCALE_PROBE.md) — per-round wall must stay FLAT
     * in round number, merges/round is the batching win.
     */
   final case class RoundStats(round: Int, mergesThisRound: Int,

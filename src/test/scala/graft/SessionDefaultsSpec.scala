@@ -134,4 +134,34 @@ class SessionDefaultsSpec extends AnyFunSuite {
     val cluster = SessionDefaults.profileConfigs("cluster", env)
     assert(cluster("spark.sql.files.maxPartitionBytes") == "33554432")
   }
+
+  test("sessionConfigs: shuffle width = cpus, UTC, no UI") {
+    val c = SessionDefaults.sessionConfigs("6", "local[6]", env = Map.empty)
+    assert(c("spark.sql.shuffle.partitions") == "6")
+    assert(c("spark.sql.session.timeZone") == "UTC")
+    assert(c("spark.ui.enabled") == "false")
+    assert(!c.contains("spark.executor.extraClassPath"))
+  }
+
+  test("sessionConfigs: a local-cluster master adds its masterConfigs") {
+    val env = Map("SPARK_HOME" -> "/tmp/sh", "SPARK_SCALA_VERSION" -> "2.13")
+    val master = "local-cluster[2,2,3072]"
+    val c = SessionDefaults.sessionConfigs("4", master, env = env)
+    val m = SessionDefaults.masterConfigs(master, env)
+    assert(m.nonEmpty)
+    m.foreach { case (k, v) => assert(c.get(k).contains(v), k) }
+  }
+
+  test("sessionConfigs: every profileConfigs entry is present, extra wins") {
+    for (profile <- Seq("local", "cluster")) {
+      val env = Map("GRAFT_DEPLOY" -> profile)
+      val c = SessionDefaults.sessionConfigs("4", "local[4]",
+        Map("spark.speculation" -> "true", "spark.sql.shuffle.partitions" -> "9"), env)
+      SessionDefaults.profileConfigs(env).foreach { case (k, v) =>
+        assert(c.get(k).contains(v), s"$profile: $k")
+      }
+      assert(c("spark.speculation") == "true")
+      assert(c("spark.sql.shuffle.partitions") == "9")
+    }
+  }
 }

@@ -34,5 +34,12 @@ class TaskMetricsProbeSpec extends AnyFunSuite {
     TaskMetricsProbe.drain(spark)
     val idle = probe.snapshot() - probe.snapshot()
     assert(idle.tasks == 0 && idle.cpuS == 0.0)
+    // the fault-mode counters: every started task ended, none failed,
+    // and reset zeroes everything
+    assert(probe.tasksStarted.sum() == probe.tasksEnded.sum())
+    assert(probe.tasksEnded.sum() >= delta.tasks && probe.tasksFailed.sum() == 0)
+    probe.reset(spark)
+    assert(probe.snapshot() == TaskMetricsProbe.Snap(0.0, 0.0, 0L, 0L, 0L))
+    assert(probe.tasksStarted.sum() == 0 && probe.tasksEnded.sum() == 0)
   }
 }
