@@ -1,6 +1,10 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
+
+import graft.BenchCore.{Exact, Fixed, Measured, ProbeResult, QueryResult, Run}
 
 /** Benchmark main (driver contract): one JSON line with total and
   * per-query wall seconds at SPARK_GRAFT_SF_DIR.
@@ -10,9 +14,10 @@ import org.apache.spark.sql.SparkSession
   * total; sub-0.3 s-warmup queries take one — they cannot move the 2×
   * bar), outlier re-measure via [[BenchCore]], a hard wall-clock
   * budget (SPARK_GRAFT_BENCH_BUDGET_S, default 1400 s), and
-  * incremental JSON persistence after every sample. Every run also
-  * records its process-CPU delta: the JSON carries per-query "cpu"
-  * (the CPU seconds of the pass that produced the min) and
+  * incremental JSON persistence after every sample. Every execution
+  * is one [[BenchCore.Run]] with its own CPU and compile numbers: the
+  * JSON carries per-query "cpu" (the CPU seconds of the pass that
+  * produced the min) and
   * "cpu_passes", so a slow entry is attributable to plan compute vs
   * a loaded box without a rerun. The sf1 scale probe (warmup + 1
   * pass + ratio-alarm confirms, [[BenchCore.probeMeasure]]) persists
@@ -131,26 +136,12 @@ object Bench {
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted.isEmpty || wanted(n) }
 
-    // Each run also measures its process-CPU delta (BenchCore
-    // .processCpuSeconds) so a slow pass in the artifact is
-    // attributable to plan vs box without a rerun; single-threaded
-    // harness, so one mutable slot carries the last run's CPU to the
-    // caller that records it next to the wall sample.
-    var lastRunCpuS: Double = -1.0
-    var lastRunTaskCpuS: Double = -1.0
-    // Generated classes compiled during the run (cache misses only)
-    // and their compile seconds: a warm pass that recompiles shows
-    // here (DESIGN.md "Generated-class reuse").
-    var lastRunCompiles: Long = 0L
-    var lastRunCompileS: Double = 0.0
-    // Plan-inspection slots, refreshed per run (see cpu_race_flags):
-    // multi-consumer caches in the final plan, and — checked BEFORE
-    // execution, when it is meaningful — the ones unmaterialized at
-    // build time (the q84-class race precondition).
-    var lastMultiUseCache = false
-    var lastUnpinned: Seq[String] = Nil
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String = sfDir): Double = {
+    // One execution, recorded as one Run: the process-CPU delta (a slow
+    // pass is attributable to plan vs box without a rerun), the
+    // task-metric CPU, the generated classes compiled (a warm pass that
+    // recompiles shows here, DESIGN.md "Generated-class reuse") and the
+    // plan diagnostics behind cpu_race_flags / unpinned_caches.
+    def execute(fn: Query, dir: String): Run = {
       // boundary snapshot: drain the async listener bus so the delta
       // holds exactly this run's tasks (drain cost sits OUTSIDE the
       // timed window on both ends)
@@ -161,7 +152,10 @@ object Bench {
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, dir)
-        lastUnpinned = graft.operators.Staging.unpinnedMultiUse(df)
+        // checked BEFORE execution, when it is meaningful: the
+        // multi-consumer caches unmaterialized at build time (the
+        // q84-class race precondition)
+        val unpinned = graft.operators.Staging.unpinnedMultiUse(df)
         // ordered materialization INSIDE the timed window (building
         // the staged tables is part of the query's cost): one
         // sequential job per multi-consumer cache pins the
@@ -173,24 +167,18 @@ object Bench {
           graft.operators.Staging.pinCaches(df)
         df.write.format("noop").mode("overwrite").save()
         val c1 = BenchCore.processCpuSeconds()
-        lastRunCpuS = if (c0 < 0 || c1 < 0) -1.0 else c1 - c0
         val wall = (System.nanoTime() - t0) / 1e9
         val (cg1, cgNs1) = BenchCore.codegenCounters()
-        lastRunCompiles = cg1 - cg0
-        lastRunCompileS = (cgNs1 - cgNs0) / 1e9
         TaskMetricsProbe.drain(spark)
-        lastRunTaskCpuS = (taskMetrics.snapshot() - tm0).cpuS
-        // occurrence count is stable across execution; checked outside
-        // the timed window
-        lastMultiUseCache = graft.operators.Staging.cacheUse(df).exists(_._2 >= 2)
-        wall
-      } catch { case _: Throwable =>
-        lastRunCpuS = -1.0
-        lastRunTaskCpuS = -1.0
-        lastRunCompiles = -1L
-        lastRunCompileS = -1.0
-        -1.0
-      }
+        Run(wall,
+          cpu = if (c0 < 0 || c1 < 0) -1.0 else c1 - c0,
+          taskCpu = (taskMetrics.snapshot() - tm0).cpuS,
+          compiles = cg1 - cg0, compileS = (cgNs1 - cgNs0) / 1e9,
+          // occurrence count is stable across execution; checked
+          // outside the timed window
+          multiUseCache = graft.operators.Staging.cacheUse(df).exists(_._2 >= 2),
+          unpinned = unpinned)
+      } catch { case _: Throwable => Run(-1.0) }
     }
 
     // Hard wall-clock budget (BENCH_r11 died rc=124 with NOTHING
@@ -201,128 +189,61 @@ object Bench {
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1400").toDouble
     val deadlineNanos = System.nanoTime() + (budgetS * 1e9).toLong
     val outOfBudget = () => System.nanoTime() > deadlineNanos
+    def budgetLeftS: Double = (deadlineNanos - System.nanoTime()) / 1e9
 
-    // Incremental persistence: after EVERY sample, rewrite the output
-    // JSON with min-so-far per query (marked "partial":true), so a
-    // driver-side kill costs only the tail, never the whole artifact.
+    // Incremental persistence: after EVERY corpus run, rewrite the
+    // output JSON with min-so-far per query (marked "partial":true), so
+    // a driver-side kill costs only the tail, never the whole artifact.
     val out = java.nio.file.Paths.get("target", "bench_full.json")
     java.nio.file.Files.createDirectories(out.getParent)
-    val samplesSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    def persistPartial(): Unit = {
-      val qs = samplesSoFar.toSeq.collect { case (n, ss) if ss.exists(_ >= 0) =>
-        "\"" + n + "\":" + ss.filter(_ >= 0).min
-      }.mkString("{", ",", "}")
-      val partial = s"""{"metric":"total","value":-1,"unit":"sec","partial":true,"queries":$qs,"sf":"$sfDir"}"""
-      java.nio.file.Files.write(out, partial.getBytes("UTF-8"))
-    }
-
-    // Warmup pass (JIT + codegen + shuffle-service warm; cache cleared
-    // per query so persists don't accumulate). The times feed into
-    // measure() as each query's first sample — min-of-3 at the cost of
-    // two timed passes. Deadline-gated PER QUERY (a takeWhile over the
-    // strict Seq would evaluate every predicate before any warmup ran
-    // and then run them all ungated).
-    // CPU samples, positionally aligned with each query's wall-sample
-    // list as BenchCore.measure assembles it (valid seed first, then
-    // timed passes and reruns) — a FAILED warmup is skipped here
-    // exactly as measure() drops it from the sample list.
-    val cpuSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    // Task-metric CPU, same positional alignment as cpuSoFar (see
-    // TaskMetricsProbe: the process clock and the task clock diverge
-    // exactly when the master forks executors).
-    val taskCpuSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    // Codegen compiles and compile seconds, same positional alignment.
-    val compilesSoFar = collection.mutable.LinkedHashMap[String, Vector[Long]]()
-      .withDefaultValue(Vector.empty)
-    val compileSSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    def recordCodegen(name: String): Unit = {
-      compilesSoFar(name) = compilesSoFar(name) :+ lastRunCompiles
-      compileSSoFar(name) = compileSSoFar(name) :+ lastRunCompileS
-    }
-    val multiUse = collection.mutable.LinkedHashMap[String, Boolean]()
-      .withDefaultValue(false)
-    val unpinned = collection.mutable.LinkedHashMap[String, Seq[String]]()
-    // queries whose warmup produced a valid seed sample — their cpu
-    // vector starts with the seed, so race analysis drops slot 0;
-    // a failed-warmup query's vector holds timed passes only
-    val seeded = collection.mutable.Set[String]()
-    // plan diagnostics refresh on EVERY successful pass (a query whose
-    // warmup failed would otherwise never surface in cpu_race_flags /
-    // unpinned_caches no matter how its timed passes behave)
-    def recordDiagnostics(name: String): Unit = {
-      multiUse(name) = lastMultiUseCache
-      if (lastUnpinned.nonEmpty) unpinned(name) = lastUnpinned
-    }
-    val warm = queries.flatMap { case (name, fn) =>
-      if (outOfBudget()) None
-      else {
-        val t = runOnce(fn); spark.catalog.clearCache()
-        samplesSoFar(name) = Vector(t); persistPartial()
-        if (t >= 0) {
-          seeded += name
-          cpuSoFar(name) = Vector(lastRunCpuS)
-          taskCpuSoFar(name) = Vector(lastRunTaskCpuS)
-          recordCodegen(name)
-          recordDiagnostics(name)
-        }
-        Some(name -> t)
+    val log = collection.mutable.LinkedHashMap[String, Vector[Run]]()
+    def persistPartial(name: String, run: Run): Unit = {
+      log(name) = log.getOrElse(name, Vector.empty) :+ run
+      val qs = log.toSeq.collect { case (n, rs) if rs.exists(_.ok) =>
+        n -> Exact(rs.filter(_.ok).map(_.wall).min)
       }
-    }.toMap
-
-    // Timed passes keep the per-query minimum (robust against
-    // transient co-tenant load and GC pauses; observed swings >40%
-    // between whole runs on this box), and BenchCore re-measures any
-    // query whose pass spread exceeds 3x its min — so a future
-    // regression flag must survive a clean re-measure before anyone
-    // bisects it.
-    val fns = queries.toMap
-    def timedRun(name: String): Double = {
-      val sec = runOnce(fns(name))
-      spark.catalog.clearCache()
-      samplesSoFar(name) = samplesSoFar.getOrElse(name, Vector.empty) :+ sec
-      cpuSoFar(name) = cpuSoFar(name) :+ lastRunCpuS
-      taskCpuSoFar(name) = taskCpuSoFar(name) :+ lastRunTaskCpuS
-      recordCodegen(name)
-      if (sec >= 0) recordDiagnostics(name)
-      persistPartial()
-      sec
+      java.nio.file.Files.write(out, BenchCore.json("metric" -> "total", "value" -> -1,
+        "unit" -> "sec", "partial" -> true, "queries" -> ListMap(qs: _*),
+        "sf" -> sfDir).getBytes("UTF-8"))
     }
-    // quickThresholdS: a query whose warmup came in sub-0.3 s takes one
-    // timed pass, not two — it cannot move the 2x headline bar, and the
-    // saved wall time is exactly the headroom the sf1 probe below needs
-    // to never again be budget-truncated into a noisy artifact (r13).
-    val measured = BenchCore.measure(queries.map(_._1), timedRun,
-      seed = warm, outOfBudget = outOfBudget, quickThresholdS = 0.3)
-    val results = queries.map { case (name, _) => name -> measured(name).min }
 
-    // Value maps carry only MEASURED entries (the probe section's
-    // rule, applied to the corpus too): a query whose every run
-    // failed (min = -1) is named in "failed", a budget-cut one in
-    // "truncated" — neither leaks a -1 into queries/spread/cpu
-    // unmarked. The raw passes/cpu_passes logs keep every sample,
-    // including failed (-1) ones, on purpose.
-    def measuredOk(k: String): Boolean =
-      !measured(k).truncated && measured(k).min >= 0
-    val qs = results.collect { case (k, v) if measuredOk(k) =>
-      "\"" + k + "\":" + v
-    }.mkString("{", ",", "}")
-    // Every raw sample per query (3 passes + any outlier reruns), so a
-    // reader can see run-to-run noise directly instead of inferring it
-    // from the min — a loaded box shows one inflated slot, a plan
-    // regression shows consistent slowness; spread/reruns summarize it.
-    val ps = queries.map { case (name, _) =>
-      "\"" + name + "\":[" + measured(name).samples.mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val spreads = queries.collect { case (name, _) if measuredOk(name) =>
-      "\"" + name + "\":" + BenchCore.jnum(measured(name).spread, 3)
-    }.mkString("{", ",", "}")
-    val reruns = queries.collect { case (name, _) if measured(name).reruns > 0 =>
-      "\"" + name + "\":" + measured(name).reruns
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    // One warmup pass, then `measure` (BenchCore.measure or
+    // probeMeasure) over runs at `dir`; the warmup runs seed it, and
+    // every run clears the cache so persists don't accumulate. The
+    // warmup is deadline-gated PER QUERY (a takeWhile over the strict
+    // Seq would evaluate every predicate before any warmup ran and
+    // then run them all ungated).
+    def warmThenMeasure[R](qs: Seq[(String, Query)], dir: String,
+        onRun: (String, Run) => Unit = (_, _) => ())(
+        measure: (String => Run, Map[String, Run]) => Map[String, R]): Map[String, R] = {
+      val fns = qs.toMap
+      def run(name: String): Run = {
+        val r = execute(fns(name), dir)
+        spark.catalog.clearCache()
+        onRun(name, r)
+        r
+      }
+      val warm = qs.flatMap { case (name, _) =>
+        if (outOfBudget()) None else Some(name -> run(name))
+      }.toMap
+      measure(run, warm)
+    }
+
+    // Warmup (JIT + codegen + shuffle-service warm) seeds min-of-3 at
+    // the cost of two timed passes. Timed passes keep the per-query
+    // minimum (robust against transient co-tenant load and GC pauses;
+    // observed swings >40% between whole runs on this box), and
+    // BenchCore re-measures any query whose pass spread exceeds 3x its
+    // min — so a future regression flag must survive a clean
+    // re-measure before anyone bisects it. quickThresholdS: a query
+    // whose warmup came in sub-0.3 s takes one timed pass, not two — it
+    // cannot move the 2x headline bar, and the saved wall time is
+    // exactly the headroom the sf1 probe below needs to never again be
+    // budget-truncated into a noisy artifact (r13).
+    val corpus = warmThenMeasure(queries, sfDir, persistPartial) { (run, warm) =>
+      BenchCore.measure(queries.map(_._1), run,
+        seed = warm, outOfBudget = outOfBudget, quickThresholdS = 0.3)
+    }
 
     // 10x scale-probe section: when the sf1 dataset exists (generated
     // by tools/gen_sf1.py into probe_data/sf1 — NOT under target/,
@@ -338,61 +259,36 @@ object Bench {
     require(missingProbe.isEmpty,
       s"sf1 probe names not registered in SparkEntry.queries: " +
         missingProbe.mkString(", "))
-    def budgetLeftS: Double = (deadlineNanos - System.nanoTime()) / 1e9
-    val sf1Section =
+    val sf1 =
       if (wanted.nonEmpty || outOfBudget() ||
           !new java.io.File(sf1Dir, "documents.parquet").exists() ||
           new java.io.File(sfDir).getCanonicalPath ==
-            new java.io.File(sf1Dir).getCanonicalPath) ""
+            new java.io.File(sf1Dir).getCanonicalPath) None
       else {
         val probe = SparkEntry.queries.toSeq.sortBy(_._1)
           .filter { case (n, _) => probeNames.contains(n) }
         val budgetAtStart = budgetLeftS
-        // Probe warmups seed the probe measure too, and the SAME
-        // deadline governs every probe run — the probe is a ratio
-        // check, so a budget-truncated probe (fewer entries) is still
-        // useful where a blown driver timeout is not. Gated per entry
-        // (not takeWhile: on a strict Seq the predicates all evaluate
-        // before the first warmup runs).
-        val pCpu = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-          .withDefaultValue(Vector.empty)
-        val pTaskCpu = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-          .withDefaultValue(Vector.empty)
-        val pWarm = probe.flatMap { case (name, fn) =>
-          if (outOfBudget()) None
-          else {
-            val t = runOnce(fn, sf1Dir); spark.catalog.clearCache()
-            if (t >= 0) {
-              pCpu(name) = Vector(lastRunCpuS)
-              pTaskCpu(name) = Vector(lastRunTaskCpuS)
-            }
-            Some(name -> t)
-          }
-        }.toMap
-        val pFns = probe.toMap
-        def probeRun(name: String): Double = {
-          val sec = runOnce(pFns(name), sf1Dir)
-          spark.catalog.clearCache()
-          pCpu(name) = pCpu(name) :+ lastRunCpuS
-          pTaskCpu(name) = pTaskCpu(name) :+ lastRunTaskCpuS
-          sec
-        }
-        // warmup + 1 timed pass per entry; any entry whose best still
-        // exceeds 10x its same-run sf0.1 min gets confirmation passes
+        // The SAME deadline governs every probe run — the probe is a
+        // ratio check, so a budget-truncated probe (fewer entries) is
+        // still useful where a blown driver timeout is not. Warmup + 1
+        // timed pass per entry; any entry whose best still exceeds 10x
+        // its same-run sf0.1 min gets confirmation passes
         // (BenchCore.probeMeasure) — a superlinear number in this
         // artifact has survived re-measurement, and every sample,
         // spread and pass count is persisted so a reader can tell box
         // noise from plan drift (the r13 40.5x lesson).
-        val pMeasured = BenchCore.probeMeasure(probe.map(_._1), probeRun,
-          baseline = results.toMap, ratioAlarm = 10.0,
-          outOfBudget = outOfBudget, seed = pWarm)
+        val baseline = corpus.map { case (n, r) => n -> r.min }
+        val measured = warmThenMeasure(probe, sf1Dir) { (run, warm) =>
+          BenchCore.probeMeasure(probe.map(_._1), run, baseline = baseline,
+            ratioAlarm = 10.0, outOfBudget = outOfBudget, seed = warm)
+        }
         // Output-row count per entry (one count() job each, budget-
         // gated): a wall ratio alone cannot distinguish "superlinear
         // plan" from "the OUTPUT grew superlinearly" — q88's standing
         // 3.2x is pair-output growth, and cost-per-output-row is the
         // machine-readable way the artifact says so instead of a prose
         // re-explanation each round.
-        val pRows = probe.flatMap { case (name, fn) =>
+        val rowsOut = probe.flatMap { case (name, fn) =>
           if (outOfBudget()) None
           else {
             val n = try fn(spark, sf1Dir).count() catch { case _: Throwable => -1L }
@@ -400,141 +296,140 @@ object Bench {
             if (n >= 0) Some(name -> n) else None
           }
         }.toMap
-        // Value fields carry only MEASURED entries: a probe whose
-        // every run failed (min = -1) is named in "failed", a probe
-        // the budget cut before any sample in "truncated" — neither
-        // may leak a -1 into the queries/ratio maps unmarked.
-        def pField(f: (String, BenchCore.ProbeResult) => String): String =
-          probe.collect { case (name, _)
-              if !pMeasured(name).truncated && pMeasured(name).min >= 0 =>
-            "\"" + name + "\":" + f(name, pMeasured(name))
-          }.mkString("{", ",", "}")
-        val pq = pField((_, r) => r.min.toString)
-        val pRatio = pField((_, r) => BenchCore.jnum(r.ratio, 2))
-        // "spread_all", not "spread": unlike the corpus section's
-        // spread (timed passes only, seed excluded), the probe spread
-        // includes the seeded warmup — the probe runs in a warm JVM,
-        // so its seed is a real sample; the name records the
-        // difference in semantics.
-        val pSpread = pField((_, r) => BenchCore.jnum(r.spread, 3))
-        val pPasses = pField((_, r) => r.samples.size.toString)
-        val pSamples = pField((_, r) => r.samples.mkString("[", ",", "]"))
-        val pCpuOfMin = pField((n, r) =>
-          BenchCore.jnum(BenchCore.cpuOfMin(r.samples, pCpu(n)), 3))
-        val pTaskCpuOfMin = pField((n, r) =>
-          BenchCore.jnum(BenchCore.cpuOfMin(r.samples, pTaskCpu(n)), 3))
-        val pTrunc = probe.collect { case (name, _) if pMeasured(name).truncated =>
-          "\"" + name + "\""
-        }.mkString("[", ",", "]")
-        val pFailed = probe.collect { case (name, _)
-            if !pMeasured(name).truncated && pMeasured(name).min < 0 =>
-          "\"" + name + "\""
-        }.mkString("[", ",", "]")
-        // rows_out obeys the same measured-entries invariant as every
-        // other value field: a probe whose timed runs all failed or
-        // were truncated must not surface a successful count() as if
-        // it had been measured.
-        val pRowsJson = probe.collect { case (name, _)
-            if pRows.contains(name) &&
-              !pMeasured(name).truncated && pMeasured(name).min >= 0 =>
-          "\"" + name + "\":" + pRows(name)
-        }.mkString("{", ",", "}")
-        s""","sf1":{"dir":"$sf1Dir","budget_left_start_s":${BenchCore.jnum(budgetAtStart, 1)},""" +
-          s""""queries":$pq,"ratio":$pRatio,"spread_all":$pSpread,""" +
-          s""""passes":$pPasses,"samples":$pSamples,"cpu":$pCpuOfMin,""" +
-          s""""cpu_task":$pTaskCpuOfMin,""" +
-          s""""rows_out":$pRowsJson,"truncated":$pTrunc,"failed":$pFailed,""" +
-          s""""budget_left_end_s":${BenchCore.jnum(budgetLeftS, 1)}}"""
+        Some(Sf1(sf1Dir, budgetAtStart, probe.map(_._1), measured, rowsOut, budgetLeftS))
       }
 
-    val rerunsField = if (reruns == "{}") "" else s""","reruns":$reruns"""
-    // Budget-truncated queries (no samples at all) are UNMEASURED, not
-    // broken — named separately so a -1 never masquerades as a failure.
-    val truncated = queries.collect { case (name, _) if measured(name).truncated =>
-      "\"" + name + "\""
-    }.mkString("[", ",", "]")
-    val truncatedField = if (truncated == "[]") "" else s""","truncated":$truncated"""
-    // All-runs-failed queries (min = -1, not budget-cut) — excluded
-    // from the value maps above, named here.
-    val failed = queries.collect { case (name, _)
-        if !measured(name).truncated && measured(name).min < 0 =>
-      "\"" + name + "\""
-    }.mkString("[", ",", "]")
-    val failedField = if (failed == "[]") "" else s""","failed":$failed"""
-    // Per-query process-CPU seconds of the pass that produced the min
-    // (cpu ≈ wall × busy-cores → plan compute; cpu ≪ that → box/IO),
-    // plus every per-pass CPU sample aligned with "passes".
-    val cpuMin = queries.collect { case (name, _) if measuredOk(name) =>
-      "\"" + name + "\":" +
-        BenchCore.jnum(BenchCore.cpuOfMin(measured(name).samples, cpuSoFar(name)), 3)
-    }.mkString("{", ",", "}")
-    val cpuPasses = queries.map { case (name, _) =>
-      "\"" + name + "\":[" + cpuSoFar(name).map(c => BenchCore.jnum(c, 3)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    // Task-metric CPU of the min pass + every pass, aligned exactly
-    // like cpu/cpu_passes. On local[n] cpu_task ≈ cpu minus harness
-    // threads; under a forked-executor master cpu_task is the ONLY
-    // valid plan-CPU attribution (cpu collapses to driver overhead).
-    val cpuTaskMin = queries.collect { case (name, _) if measuredOk(name) =>
-      "\"" + name + "\":" +
-        BenchCore.jnum(BenchCore.cpuOfMin(measured(name).samples, taskCpuSoFar(name)), 3)
-    }.mkString("{", ",", "}")
-    val cpuTaskPasses = queries.map { case (name, _) =>
-      "\"" + name + "\":[" + taskCpuSoFar(name).map(c => BenchCore.jnum(c, 3)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    // Per-pass codegen compiles and compile seconds, aligned exactly
-    // like cpu_passes (-1 for a failed run). Nonzero entries after
-    // the first are warm passes recompiling.
-    val compilePasses = queries.map { case (name, _) =>
-      "\"" + name + "\":[" + compilesSoFar(name).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val compileSPasses = queries.map { case (name, _) =>
-      "\"" + name + "\":[" + compileSSoFar(name).map(c => BenchCore.jnum(c, 3)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    // The q84-class race, machine-visible (r16 verdict #4): queries
-    // whose warm CPU passes spread >1.5x (gap >5s) WITH a
-    // multi-consumer cache in the plan. Since pinCaches runs in every
-    // timed pass, a firing here is box contention or a pinning gap —
-    // the shortlist for an isolated re-measure. "unpinned_caches"
-    // records which query plans REQUIRED pinning (pure cores whose
-    // caches pinCaches built); RaceDisciplineSpec asserts the pinned
-    // plans are race-free for every query. BOTH cpu series feed the
-    // flag: under a forked-executor master the process clock collapses
-    // to driver overhead (a race there would be invisible to it), so
-    // the task-metric series carries the detection; in local mode the
-    // process series additionally sees driver-side compute.
-    val raceFlags = queries.collect { case (name, _)
-        if Seq(cpuSoFar(name), taskCpuSoFar(name)).exists(series =>
-          BenchCore.cpuRaceFlag(
-            if (seeded(name)) series.drop(1) else series,
-            multiUse(name))) =>
-      "\"" + name + "\""
-    }.mkString("[", ",", "]")
-    val raceField = if (raceFlags == "[]") "" else s""","cpu_race_flags":$raceFlags"""
-    val unpinnedJson = unpinned.map { case (name, caches) =>
-      "\"" + name + "\":[" +
-        caches.map(BenchCore.jstr).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val unpinnedField = if (unpinnedJson == "{}") "" else s""","unpinned_caches":$unpinnedJson"""
     // Whole-run shuffle transport totals (all passes, warmups and the
-    // probe included): remote vs local read bytes split by the
-    // BlockManager locality of the fetch. remote_mb > 0 is the
-    // machine-readable attestation that this run moved shuffle blocks
-    // between executor JVMs over the wire — impossible on local[n],
-    // expected under local-cluster.
+    // probe included).
     TaskMetricsProbe.drain(spark)
-    val tmTotal = taskMetrics.snapshot()
-    val shuffleField =
-      s""","shuffle":{"remote_mb":${BenchCore.jnum(tmTotal.remoteShuffleBytes / 1048576.0, 1)},""" +
-        s""""local_mb":${BenchCore.jnum(tmTotal.localShuffleBytes / 1048576.0, 1)},""" +
-        s""""tasks":${tmTotal.tasks}}"""
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","master":${BenchCore.jstr(master)},"queries":$qs,"passes":$ps,"spread":$spreads,"cpu":$cpuMin,"cpu_passes":$cpuPasses,"cpu_task":$cpuTaskMin,"cpu_task_passes":$cpuTaskPasses,"codegen_compiles":$compilePasses,"codegen_compile_s":$compileSPasses$rerunsField$truncatedField$failedField$raceField$unpinnedField$shuffleField,"sf":"$sfDir"$sf1Section}"""
+    val json = artifact(master, sfDir, queries.map(_._1), corpus,
+      taskMetrics.snapshot(), sf1)
     println(json)
     // The console line can be lost to log-tail truncation (one line per
     // 114 queries is long); persist the identical JSON where the driver
     // and later rounds can always read it.
     java.nio.file.Files.write(out, json.getBytes("UTF-8"))
     SessionDefaults.stopAndReap(spark)
+  }
+
+  private type Query = (SparkSession, String) => org.apache.spark.sql.DataFrame
+
+  /** The sf1 section's record: probe entries in bench order, their
+    * measurements and output-row counts, and the budget left at the
+    * section's start and end.
+    */
+  final case class Sf1(dir: String, budgetLeftStartS: Double, names: Seq[String],
+      measured: Map[String, ProbeResult], rowsOut: Map[String, Long],
+      budgetLeftEndS: Double)
+
+  /** The bench artifact: one JSON object over the corpus measurements
+    * (`names` in bench order), the run's task-metric totals and the
+    * optional sf1 section.
+    *
+    * Value maps (queries, spread, cpu, cpu_task; sf1 queries through
+    * rows_out) carry only MEASURED entries: a query whose every run
+    * failed is named in "failed", a budget-cut one in "truncated" —
+    * neither leaks a -1 into a value map unmarked. The raw per-pass
+    * logs (passes, cpu_passes, cpu_task_passes, codegen_*) keep every
+    * run, failed (-1) ones included, on purpose: a reader sees
+    * run-to-run noise directly — a loaded box shows one inflated slot,
+    * a plan regression consistent slowness. "cpu"/"cpu_task" are the
+    * CPU seconds of the run the min came from (cpu ≈ wall × busy-cores
+    * → plan compute; cpu ≪ that → box/IO). On local[n] cpu_task ≈ cpu
+    * minus harness threads; under a forked-executor master cpu_task is
+    * the ONLY valid plan-CPU attribution (cpu collapses to driver
+    * overhead). Nonzero codegen entries after the first pass are warm
+    * passes recompiling.
+    */
+  def artifact(master: String, sfDir: String, names: Seq[String],
+      measured: Map[String, QueryResult], shuffle: TaskMetricsProbe.Snap,
+      sf1: Option[Sf1]): String = {
+    val corpus = names.map(n => n -> measured(n))
+    def optional(key: String, v: Iterable[_]): Seq[(String, Any)] =
+      if (v.isEmpty) Nil else Seq(key -> v)
+    val unpinned = corpus.flatMap { case (n, r) =>
+      r.runs.filter(_.ok).map(_.unpinned).filter(_.nonEmpty).lastOption.map(n -> _)
+    }
+    BenchCore.json(Seq(
+      "metric" -> "total",
+      "value" -> Exact(corpus.map(_._2.min).filter(_ >= 0).sum),
+      "unit" -> "sec", "master" -> master,
+      "queries" -> valueMap(corpus)(r => Exact(r.min)),
+      "passes" -> perQuery(corpus)(_.samples.map(Exact)),
+      "spread" -> valueMap(corpus)(r => Fixed(r.spread, 3)),
+      "cpu" -> valueMap(corpus)(r => Fixed(r.best.get.cpu, 3)),
+      "cpu_passes" -> perQuery(corpus)(_.runs.map(x => Fixed(x.cpu, 3))),
+      "cpu_task" -> valueMap(corpus)(r => Fixed(r.best.get.taskCpu, 3)),
+      "cpu_task_passes" -> perQuery(corpus)(_.runs.map(x => Fixed(x.taskCpu, 3))),
+      "codegen_compiles" -> perQuery(corpus)(_.runs.map(_.compiles)),
+      "codegen_compile_s" -> perQuery(corpus)(_.runs.map(x => Fixed(x.compileS, 3)))) ++
+      optional("reruns", perQuery(corpus.filter(_._2.reruns > 0))(_.reruns)) ++
+      optional("truncated", corpus.collect { case (n, r) if r.truncated => n }) ++
+      optional("failed", corpus.collect { case (n, r) if r.failed => n }) ++
+      optional("cpu_race_flags", corpus.collect { case (n, r) if raced(r) => n }) ++
+      optional("unpinned_caches", ListMap(unpinned: _*)) ++
+      Seq(
+        // remote vs local shuffle read bytes, split by the BlockManager
+        // locality of the fetch: remote_mb > 0 attests that this run
+        // moved shuffle blocks between executor JVMs over the wire —
+        // impossible on local[n], expected under local-cluster
+        "shuffle" -> ListMap(
+          "remote_mb" -> Fixed(shuffle.remoteShuffleBytes / 1048576.0, 1),
+          "local_mb" -> Fixed(shuffle.localShuffleBytes / 1048576.0, 1),
+          "tasks" -> shuffle.tasks),
+        "sf" -> sfDir) ++
+      sf1.map(s => "sf1" -> sf1Section(s)): _*)
+  }
+
+  private def sf1Section(s: Sf1): ListMap[String, Any] = {
+    val probe = s.names.map(n => n -> s.measured(n))
+    ListMap(
+      "dir" -> s.dir,
+      "budget_left_start_s" -> Fixed(s.budgetLeftStartS, 1),
+      "queries" -> valueMap(probe)(r => Exact(r.min)),
+      "ratio" -> valueMap(probe)(r => Fixed(r.ratio, 2)),
+      // "spread_all", not "spread": unlike the corpus section's spread
+      // (timed passes only, seed excluded), the probe spread includes
+      // the seeded warmup — the probe runs in a warm JVM, so its seed
+      // is a real sample; the name records the difference.
+      "spread_all" -> valueMap(probe)(r => Fixed(r.spread, 3)),
+      "passes" -> valueMap(probe)(_.samples.size),
+      "samples" -> valueMap(probe)(_.samples.map(Exact)),
+      "cpu" -> valueMap(probe)(r => Fixed(r.best.get.cpu, 3)),
+      "cpu_task" -> valueMap(probe)(r => Fixed(r.best.get.taskCpu, 3)),
+      // a probe whose timed runs all failed or were truncated must not
+      // surface a successful count() as if it had been measured
+      "rows_out" -> ListMap(probe.collect {
+        case (n, r) if r.measured && s.rowsOut.contains(n) => n -> s.rowsOut(n) }: _*),
+      "truncated" -> probe.collect { case (n, r) if r.truncated => n },
+      "failed" -> probe.collect { case (n, r) if r.failed => n },
+      "budget_left_end_s" -> Fixed(s.budgetLeftEndS, 1))
+  }
+
+  private def perQuery[R](rs: Seq[(String, R)])(f: R => Any): ListMap[String, Any] =
+    ListMap(rs.map { case (n, r) => n -> f(r) }: _*)
+
+  /** A value map: measured entries only. */
+  private def valueMap[R <: Measured](rs: Seq[(String, R)])(f: R => Any): ListMap[String, Any] =
+    perQuery(rs.filter(_._2.measured))(f)
+
+  /** The q84-class race, machine-visible (r16 verdict #4): a query
+    * whose warm CPU runs spread >1.5x (gap >5s) WITH a multi-consumer
+    * cache in the plan. Since pinCaches runs in every timed pass, a
+    * firing here is box contention or a pinning gap — the shortlist
+    * for an isolated re-measure. "unpinned_caches" records which query
+    * plans REQUIRED pinning (pure cores whose caches pinCaches built);
+    * RaceDisciplineSpec asserts the pinned plans are race-free for
+    * every query. BOTH cpu series feed the flag: under a
+    * forked-executor master the process clock collapses to driver
+    * overhead (a race there would be invisible to it), so the
+    * task-metric series carries the detection; in local mode the
+    * process series additionally sees driver-side compute. The plan
+    * diagnostics come from the last successful run.
+    */
+  private def raced(r: QueryResult): Boolean = {
+    val multiUse = r.runs.filter(_.ok).lastOption.exists(_.multiUseCache)
+    Seq(r.warm.map(_.cpu), r.warm.map(_.taskCpu))
+      .exists(BenchCore.cpuRaceFlag(_, multiUse))
   }
 }

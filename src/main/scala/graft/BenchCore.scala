@@ -77,6 +77,37 @@ object BenchCore {
     case c => c.toString
   } + "\""
 
+  /** A number rendered with `decimals` places. */
+  final case class Fixed(v: Double, decimals: Int)
+
+  /** A number rendered by `Double.toString`: as many digits as it
+    * takes to tell the double apart, no fixed width.
+    */
+  final case class Exact(v: Double)
+
+  /** One JSON object, keys in the given order. A bare Double gets 2
+    * places, [[Fixed]] its own and [[Exact]] `Double.toString`, all
+    * but [[Exact]] through [[jnum]], so the decimal separator is `.`
+    * under any default locale. Strings go through [[jstr]], a Map is a
+    * nested object in its iteration order, a Seq an array, and any
+    * other value (Int, Long, Boolean) its `toString`.
+    */
+  def json(fields: (String, Any)*): String = jobject(fields)
+
+  private def jobject(fields: Iterable[(Any, Any)]): String =
+    fields.map { case (k, v) => s"${jstr(k.toString)}:${jvalue(v)}" }
+      .mkString("{", ",", "}")
+
+  private def jvalue(v: Any): String = v match {
+    case d: Double => jnum(d, 2)
+    case Fixed(d, n) => jnum(d, n)
+    case Exact(d) => d.toString
+    case s: String => jstr(s)
+    case m: collection.Map[_, _] => jobject(m)
+    case xs: Seq[_] => xs.map(jvalue).mkString("[", ",", "]")
+    case other => other.toString
+  }
+
   /** Post-hoc CPU-spread race flag for the bench artifact: a query
     * whose WARM cpu passes (seed excluded — the seed pays JIT) spread
     * past `ratio` with an absolute gap past `floorS`, AND whose plan
@@ -93,56 +124,69 @@ object BenchCore {
       valid.max / valid.min > ratio && valid.max - valid.min > floorS
   }
 
-  /** The CPU sample paired with the minimum VALID wall sample — the
-    * pass the headline min came from. Pairs are positional; if THAT
-    * pass's CPU sample is missing or invalid (the recording loop can
-    * be cut short by a budget trip), the answer is -1 (unattributable)
-    * — substituting a different pass's CPU would silently mislabel the
-    * artifact, attributing the min wall to compute it didn't do.
+  /** One execution of one query: wall seconds (negative when the run
+    * failed), the process-CPU and task-CPU seconds around it (-1 when
+    * a clock is unreadable or the run failed), the generated classes
+    * it compiled and their compile seconds (-1 when the run failed),
+    * and two plan diagnostics: whether the final plan holds a
+    * multi-consumer cache, and the multi-consumer caches that were
+    * still unmaterialized when the plan was built.
     */
-  def cpuOfMin(walls: Seq[Double], cpus: Seq[Double]): Double = {
-    val validWalls = walls.zipWithIndex.filter(_._1 >= 0)
-    if (validWalls.isEmpty) -1.0
-    else {
-      val minIdx = validWalls.minBy(_._1)._2
-      cpus.lift(minIdx).filter(_ >= 0).getOrElse(-1.0)
-    }
+  final case class Run(wall: Double, cpu: Double = -1.0, taskCpu: Double = -1.0,
+      compiles: Long = -1L, compileS: Double = -1.0,
+      multiUseCache: Boolean = false, unpinned: Seq[String] = Nil) {
+    def ok: Boolean = wall >= 0
   }
 
-  /** One query's measurement: best wall seconds, raw-pass spread
-    * (max/min of the timed passes, excluding any seeded warmup sample,
-    * before any rerun; 1.0 when all passes agree or fewer than two
-    * passes ran, -1 when every sample failed), rerun count, and every
-    * sample taken (seed first when present).
-    *
-    * `min == -1` is overloaded by callers' runners ("this query
-    * failed"), so [[truncated]] distinguishes the other -1 case: the
-    * wall-clock budget tripped before this query took ANY sample.
-    * A truncated query is unmeasured, not broken — downstream readers
-    * (bench JSON, round-over-round diffs) must not count it as a
-    * failure.
+  /** The runs a measurement kept for one query, seed first when
+    * present. `min == -1` is overloaded ("every run failed"), so
+    * [[truncated]] names the other -1 case: the wall-clock budget
+    * tripped before this query took ANY sample. A truncated query is
+    * unmeasured, not broken — downstream readers (bench JSON,
+    * round-over-round diffs) must not count it as a failure.
+    */
+  sealed trait Measured {
+    def runs: Seq[Run]
+    def samples: Seq[Double] = runs.map(_.wall)
+    /** The run the min came from: the first valid run with the least
+      * wall, carrying its own CPU and compile numbers.
+      */
+    def best: Option[Run] = runs.filter(_.ok).minByOption(_.wall)
+    def min: Double = best.fold(-1.0)(_.wall)
+    def truncated: Boolean = runs.isEmpty
+    def failed: Boolean = !truncated && min < 0
+    def measured: Boolean = min >= 0
+  }
+
+  /** One query's measurement: raw-pass spread (max/min of the timed
+    * passes, excluding any seeded warmup sample, before any rerun; 1.0
+    * when all passes agree or fewer than two passes ran, -1 when every
+    * sample failed), rerun count, and whether `runs` starts with the
+    * warmup seed.
     */
   final case class QueryResult(
-      min: Double, spread: Double, reruns: Int, samples: Seq[Double]) {
-    def truncated: Boolean = samples.isEmpty
+      runs: Seq[Run], spread: Double, reruns: Int, seeded: Boolean) extends Measured {
+    /** The runs after the seed: the seed pays JIT, so warm-run
+      * analyses drop it.
+      */
+    def warm: Seq[Run] = if (seeded) runs.drop(1) else runs
   }
 
-  /** Run `names` through timed passes of `run` (which returns wall
-    * seconds, or a negative value on failure), then re-measure
-    * outliers. Pass-major order: queries interleave across passes so a
-    * transient load spike hits one pass of many queries rather than
-    * all passes of one.
+  /** Run `names` through timed passes of `run` (a failed run has a
+    * negative wall), then re-measure outliers. Pass-major order:
+    * queries interleave across passes so a transient load spike hits
+    * one pass of many queries rather than all passes of one.
     *
-    * `seed` supplies an already-taken sample per query (the warmup
+    * `seed` supplies an already-taken run per query (the warmup
     * pass); a seeded query then gets `passes - 1` timed passes, so
     * `passes` is always the target sample count. Seed samples pay the
     * JIT/codegen cost (they are COLD), so a cold seed can't beat a
     * warm pass and including it in the min is harmless — but it is
     * excluded from the spread, otherwise every query would look like
     * an outlier and the rerun logic would burn the budget the seeding
-    * saved. A FAILED warmup (negative seed value) is ignored entirely
-    * rather than occupying a sample slot, so that query still gets the
-    * full `passes` timed chances at a valid measurement.
+    * saved. A FAILED warmup is ignored entirely rather than occupying
+    * a sample slot, so that query still gets the full `passes` timed
+    * chances at a valid measurement.
     *
     * `outOfBudget` is consulted before every individual run (passes
     * and reruns); once it returns true no further work is started and
@@ -157,17 +201,17 @@ object BenchCore {
     */
   def measure(
       names: Seq[String],
-      run: String => Double,
+      run: String => Run,
       passes: Int = 3,
       spreadThreshold: Double = 3.0,
       maxReruns: Int = 2,
       cleanFactor: Double = 1.5,
       outOfBudget: () => Boolean = () => false,
-      seed: Map[String, Double] = Map.empty,
+      seed: Map[String, Run] = Map.empty,
       quickThresholdS: Double = 0.0): Map[String, QueryResult] = {
-    val validSeed = seed.filter(_._2 >= 0)
+    val validSeed = seed.filter(_._2.ok)
     val target = names.map { n =>
-      n -> (if (validSeed.get(n).exists(_ < quickThresholdS)) math.min(2, passes)
+      n -> (if (validSeed.get(n).exists(_.wall < quickThresholdS)) math.min(2, passes)
             else passes)
     }.toMap
     val acc = collection.mutable.LinkedHashMap(
@@ -182,43 +226,39 @@ object BenchCore {
     names.map { name =>
       val all = acc(name)
       val seeded = validSeed.contains(name)
-      val timed = if (seeded) all.drop(1) else all
-      val ok = all.filter(_ >= 0)
-      val timedOk = timed.filter(_ >= 0)
-      if (ok.isEmpty) {
-        name -> QueryResult(-1.0, -1.0, 0, all)
+      val timedOk = (if (seeded) all.drop(1) else all).filter(_.ok).map(_.wall)
+      if (!all.exists(_.ok)) {
+        name -> QueryResult(all, -1.0, 0, seeded)
       } else {
         val spread =
           if (timedOk.size < 2 || timedOk.min <= 0) 1.0
           else timedOk.max / timedOk.min
-        var best = ok.min
-        var extra = List.empty[Double]
+        var best = all.filter(_.ok).map(_.wall).min
+        var extra = Vector.empty[Run]
         if (spread > spreadThreshold) {
           var clean = false
           while (!clean && extra.size < maxReruns && !outOfBudget()) {
-            val t = run(name)
-            extra ::= t
-            if (t >= 0) {
-              clean = t <= best * cleanFactor
-              if (t < best) best = t
+            val r = run(name)
+            extra :+= r
+            if (r.ok) {
+              clean = r.wall <= best * cleanFactor
+              if (r.wall < best) best = r.wall
             }
           }
         }
-        name -> QueryResult(best, spread, extra.size, all ++ extra.reverse)
+        name -> QueryResult(all ++ extra, spread, extra.size, seeded)
       }
     }.toMap
   }
 
-  /** One scale-probe entry: best wall seconds, spread over ALL valid
-    * samples (seed included — the probe runs after the corpus in a
-    * warm JVM, so the seed is not JIT-cold the way the corpus warmup
-    * is), every sample, and the ratio of the best to the caller's
-    * baseline (-1 when no baseline or no valid sample exists).
+  /** One scale-probe entry: spread over ALL valid samples (seed
+    * included — the probe runs after the corpus in a warm JVM, so the
+    * seed is not JIT-cold the way the corpus warmup is), and the ratio
+    * of the best to the caller's baseline (-1 when no baseline or no
+    * valid sample exists).
     */
-  final case class ProbeResult(
-      min: Double, spread: Double, samples: Seq[Double], ratio: Double) {
-    def truncated: Boolean = samples.isEmpty
-  }
+  final case class ProbeResult(runs: Seq[Run], spread: Double, ratio: Double)
+    extends Measured
 
   /** Scale-probe measurement: ratio evidence, not a headline number.
     *
@@ -241,30 +281,29 @@ object BenchCore {
     */
   def probeMeasure(
       names: Seq[String],
-      run: String => Double,
+      run: String => Run,
       baseline: Map[String, Double],
       ratioAlarm: Double = 10.0,
       maxConfirm: Int = 2,
       outOfBudget: () => Boolean = () => false,
-      seed: Map[String, Double] = Map.empty): Map[String, ProbeResult] = {
+      seed: Map[String, Run] = Map.empty): Map[String, ProbeResult] = {
     names.map { name =>
-      var samples = seed.get(name).filter(_ >= 0).toVector
-      if (!outOfBudget()) samples :+= run(name)
-      def ok = samples.filter(_ >= 0)
+      var runs = seed.get(name).filter(_.ok).toVector
+      if (!outOfBudget()) runs :+= run(name)
+      def ok = runs.filter(_.ok).map(_.wall)
       if (ok.isEmpty) {
-        name -> ProbeResult(-1.0, -1.0, samples, -1.0)
+        name -> ProbeResult(runs, -1.0, -1.0)
       } else {
         val base = baseline.get(name).filter(_ > 0)
         def best = ok.min
         var confirms = 0
         while (base.exists(b => best / b > ratioAlarm) &&
             confirms < maxConfirm && !outOfBudget()) {
-          samples :+= run(name)
+          runs :+= run(name)
           confirms += 1
         }
         val spread = if (ok.size < 2 || ok.min <= 0) 1.0 else ok.max / ok.min
-        name -> ProbeResult(best, spread, samples,
-          base.map(best / _).getOrElse(-1.0))
+        name -> ProbeResult(runs, spread, base.map(best / _).getOrElse(-1.0))
       }
     }.toMap
   }

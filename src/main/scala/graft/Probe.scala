@@ -10,6 +10,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.BenchCore.{Fixed, json}
 import graft.operators.{BpeTrainer, Checkpoints, Components}
 
 /** The engine's one tooling main: fault-injection attestations, scale
@@ -20,8 +21,9 @@ import graft.operators.{BpeTrainer, Checkpoints, Components}
   * Every mode builds its session through [[SessionDefaults.session]]
   * (`SPARK_GRAFT_CPUS` cores, default 32; `GRAFT_MASTER`), reads the
   * one [[TaskMetricsProbe]] listener, prints one JSON object per line
-  * through [[json]], stops through [[SessionDefaults.stopAndReap]] and
-  * exits 1 when its attestation fails. The fault modes (kill,
+  * through [[BenchCore.json]], stops through
+  * [[SessionDefaults.stopAndReap]] and exits 1 when its attestation
+  * fails. The fault modes (kill,
   * decommission, speculation, dynalloc, streamkill) need forked
   * executor JVMs: `GRAFT_MASTER=local-cluster[workers,cores,memMB]`
   * with `SPARK_HOME=$(tools/mk_local_cluster_home.sh)
@@ -49,24 +51,6 @@ object Probe {
 
   def main(args: Array[String]): Unit =
     if (!mode(args.headOption.getOrElse("")).run(args.toSeq.drop(1))) sys.exit(1)
-
-  /** A number printed with `decimals` places; a bare Double gets 2. */
-  final case class Fixed(v: Double, decimals: Int)
-
-  /** One JSON object. Numbers go through [[BenchCore.jnum]], so the
-    * decimal separator is `.` under any default locale.
-    */
-  def json(fields: (String, Any)*): String =
-    fields.map { case (k, v) => s"${BenchCore.jstr(k)}:${jvalue(v)}" }
-      .mkString("{", ",", "}")
-
-  private def jvalue(v: Any): String = v match {
-    case d: Double => BenchCore.jnum(d, 2)
-    case Fixed(d, n) => BenchCore.jnum(d, n)
-    case s: String => BenchCore.jstr(s)
-    case xs: Seq[_] => xs.map(jvalue).mkString("[", ",", "]")
-    case other => other.toString
-  }
 
   /** Canonical result hash: rows rendered, sorted, md5'd — order- and
     * partitioning-independent, so a healthy and a post-retry run

@@ -48,9 +48,8 @@ object Verify {
       // blocks don't accumulate across the 50+ query dumps
       spark.catalog.clearCache()
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${BenchCore.jstr(k)}: ${BenchCore.jstr(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      BenchCore.json(SparkEntry.oracleSql.toSeq: _*))
     SessionDefaults.stopAndReap(spark)
   }
 }

@@ -48,11 +48,6 @@ object Checkpoints {
     *    under a real fleet reintroduces the unrecoverable-block hole
     *    — it exists for the SCALE_PROBE A/B that prices the reliable
     *    path's file I/O, not for production.
-    *  - `local2`: `localCheckpoint` at `MEMORY_AND_DISK_2` — the
-    *    replication-2 middle rung: survives any SINGLE executor loss
-    *    (a peer holds the replica) at memory speed, without files;
-    *    two overlapping losses still abort, which reliable files
-    *    never do.
     */
   private def mode: String = sys.env.getOrElse("GRAFT_CHECKPOINT", "auto")
 
@@ -60,10 +55,8 @@ object Checkpoints {
     case "auto" => stable(ds, !ds.sparkSession.sparkContext.isLocal)
     case "reliable" => stable(ds, reliable = true)
     case "local" => stable(ds, reliable = false)
-    case "local2" => ds.localCheckpoint(eager = true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_2)
     case other => throw new IllegalArgumentException(
-      s"GRAFT_CHECKPOINT must be auto|reliable|local|local2, got '$other'")
+      s"GRAFT_CHECKPOINT must be auto|reliable|local, got '$other'")
   }
 
   def stable[T](ds: Dataset[T], reliable: Boolean): Dataset[T] =

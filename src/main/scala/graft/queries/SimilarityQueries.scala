@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -179,30 +179,10 @@ object SimilarityQueries {
     import s.implicits._
     val emb = Tables.loadSpread(s, dir, "embeddings")
       .select($"vec_id", quantize($"embedding").as("q"), $"label")
-    // centroid arrays, re-quantized to int64 for exact distances
-    val cent = emb
-      .select($"label", posexplode($"q").as(Seq("pos", "qv")))
-      .groupBy($"label", $"pos")
-      .agg((sum($"qv").cast("double") / count(lit(1)).cast("double")).as("c"))
-      .groupBy($"label")
-      .agg(transform(array_sort(collect_list(struct($"pos", $"c"))),
-        x => round(x("c")).cast("long")).as("cvec"))
-      .select($"label".as("clabel"), $"cvec")
-    // assign: nearest centroid by exact squared L2 — the label-domain
-    // centroid table is COLLECTED (bounded, the q160 catalog-metadata
-    // class) and assignment becomes the IvfNearestIdx codegen kernel
-    // over one map-only corpus scan. The crossJoin(broadcast) +
-    // groupBy(vec_id).min_by shape it replaces paid a full corpus
-    // exchange (q + label per row) for the same (d2, clabel)
-    // lexicographic argmin (guide §2.4); tie order preserved — the
-    // kernel scans clabel-ascending with strict improvement.
-    val centRows = cent.collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1))).sortBy(_._1)
-    val dim = centRows.head._2.length
-    val idx = ivfNearestIdx($"q", centRows.flatMap(_._2).toArray, dim)
+    // the inverted file: every vector's nearest label centroid
+    val (_, cluster) = labelQuantizer(emb)
     val assigned = emb
-      .select($"vec_id", $"q", $"label",
-        element_at(typedLit(centRows.map(_._1).toSeq), idx).as("cluster"))
+      .select($"vec_id", $"q", $"label", cluster)
       .withColumn("nsq", intNormSq($"q"))
     val queries = assigned.filter($"vec_id" < 10)
       .select($"vec_id".as("qid"), $"q".as("qv"), $"nsq".as("qn"), $"cluster")
@@ -226,25 +206,10 @@ object SimilarityQueries {
     import graft.plans.BoundedTopK.boundedTopK
     val emb = Tables.loadSpread(s, dir, "embeddings")
       .select($"vec_id", quantize($"embedding").as("q"), $"label")
-    val cent = emb
-      .select($"label", posexplode($"q").as(Seq("pos", "qv")))
-      .groupBy($"label", $"pos")
-      .agg((sum($"qv").cast("double") / count(lit(1)).cast("double")).as("c"))
-      .groupBy($"label")
-      .agg(transform(array_sort(collect_list(struct($"pos", $"c"))),
-        x => round(x("c")).cast("long")).as("cvec"))
-      .select($"label".as("clabel"), $"cvec")
-    // corpus side: one cluster per vector (the inverted file) — the
-    // q33 shape: collected bounded centroid table + the IvfNearestIdx
-    // kernel on a map-only scan instead of crossJoin + min_by's
-    // corpus exchange (guide §2.4; identical (d2, clabel) argmin).
-    val centRows = cent.collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1))).sortBy(_._1)
-    val dim = centRows.head._2.length
-    val idx = ivfNearestIdx($"q", centRows.flatMap(_._2).toArray, dim)
+    // corpus side: one cluster per vector (the inverted file), as q33
+    val (centRows, cluster) = labelQuantizer(emb)
     val assigned = emb
-      .select($"vec_id", $"q",
-        element_at(typedLit(centRows.map(_._1).toSeq), idx).as("cluster"))
+      .select($"vec_id", $"q", cluster)
       .withColumn("nsq", intNormSq($"q"))
     // query side: nprobe=2 nearest clusters per query — |Q| rows, so
     // the per-row transform over the centroid literal is bounded
@@ -455,18 +420,11 @@ object SimilarityQueries {
           .sphericalKmeans(rows, kSeeds, iters).iterator
       }
       .collect()
-    // search: the q33 inverted-file restriction, learned quantizer.
-    // The trained centroids are ALREADY on the driver — assignment is
-    // the IvfNearestIdx kernel on a map-only scan instead of the
-    // crossJoin + min_by corpus exchange (guide §2.4; identical
-    // (d2, ccid) lexicographic argmin, ccid-ascending tie order).
-    val sortedCents = centRows.sortBy(_._1)
-    val dim = sortedCents.head._2.length
-    val nIdx = ivfNearestIdx($"q", sortedCents.flatMap(_._2), dim)
-    val withN = emb.withColumn("nsq", intNormSq($"q"))
-    val assigned = withN
+    // search: the q33 inverted-file restriction, learned quantizer
+    // (the trained centroids are already on the driver)
+    val assigned = emb.withColumn("nsq", intNormSq($"q"))
       .select($"vec_id", $"q", $"nsq",
-        element_at(typedLit(sortedCents.map(_._1).toSeq), nIdx).as("cluster"))
+        nearestCluster(centRows.sortBy(_._1).toSeq.map { case (c, v) => (c, v.toSeq) }))
     val queries = assigned.filter($"vec_id" < 10)
       .select($"vec_id".as("qid"), $"q".as("qv"), $"nsq".as("qn"), $"cluster")
     val scored = assigned.join(queries, Seq("cluster")).filter($"vec_id" =!= $"qid")
@@ -673,25 +631,9 @@ object SimilarityQueries {
         $"label")
     val emb = base.select($"vec_id", quantize($"embedding").as("q"), $"label")
       .unionByName(copies)
-    val cent = emb
-      .select($"label", posexplode($"q").as(Seq("pos", "qv")))
-      .groupBy($"label", $"pos")
-      .agg((sum($"qv").cast("double") / count(lit(1)).cast("double")).as("c"))
-      .groupBy($"label")
-      .agg(transform(array_sort(collect_list(struct($"pos", $"c"))),
-        x => round(x("c")).cast("long")).as("cvec"))
-      .select($"label".as("clabel"), $"cvec")
-    // assignment via the collected bounded centroid table + the
-    // IvfNearestIdx kernel on a map-only scan — the q33 shape; the
-    // crossJoin + min_by it replaces paid a full corpus exchange for
-    // the same (d2, clabel) lexicographic argmin (guide §2.4)
-    val centRows = cent.collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1))).sortBy(_._1)
-    val dim = centRows.head._2.length
-    val idx = ivfNearestIdx($"q", centRows.flatMap(_._2).toArray, dim)
+    val (_, cluster) = labelQuantizer(emb)
     val assigned = emb
-      .select($"vec_id", $"q", $"label",
-        element_at(typedLit(centRows.map(_._1).toSeq), idx).as("cluster"))
+      .select($"vec_id", $"q", $"label", cluster)
       .withColumn("nsq", intNormSq($"q"))
     val banded = assigned.select($"vec_id", $"cluster", $"q", $"nsq",
         explode(array((0 until 3).map(b =>
@@ -840,6 +782,41 @@ object SimilarityQueries {
     import org.apache.spark.sql.graftshim.ColumnShim
     ColumnShim.column(graft.plans.LongVecSub(
       ColumnShim.expression(a), ColumnShim.expression(b)))
+  }
+
+  /** The label-domain IVF coarse quantizer of q33/q80/q83 over `emb`
+    * (`label`, quantized `q`): per-label mean vectors re-quantized to
+    * int64, COLLECTED (bounded by the label count, the q160
+    * catalog-metadata class) and sorted by label, with the
+    * [[nearestCluster]] column that assigns every row.
+    */
+  private def labelQuantizer(emb: DataFrame): (Array[(Int, Seq[Long])], Column) = {
+    val centRows = emb
+      .select(col("label"), posexplode(col("q")).as(Seq("pos", "qv")))
+      .groupBy(col("label"), col("pos"))
+      .agg((sum(col("qv")).cast("double") / count(lit(1)).cast("double")).as("c"))
+      .groupBy(col("label"))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
+        x => round(x("c")).cast("long")).as("cvec"))
+      .select(col("label").as("clabel"), col("cvec"))
+      .collect()
+      .map(r => (r.getInt(0), r.getSeq[Long](1))).sortBy(_._1)
+    (centRows, nearestCluster(centRows.toSeq))
+  }
+
+  /** `cluster`: the id of the nearest of `cents` (id-ascending) to
+    * each row's `q`, by exact squared L2 — the IvfNearestIdx codegen
+    * kernel over one map-only corpus scan. The crossJoin(broadcast) +
+    * groupBy(vec_id).min_by shape it replaces paid a full corpus
+    * exchange for the same (d2, id) lexicographic argmin (guide
+    * §2.4); tie order preserved — the kernel scans id-ascending with
+    * strict improvement.
+    */
+  private def nearestCluster(cents: Seq[(Int, Seq[Long])]): Column = {
+    require(cents.nonEmpty,
+      "IVF assignment needs at least one centroid: the embeddings table is empty")
+    val idx = ivfNearestIdx(col("q"), cents.flatMap(_._2).toArray, cents.head._2.length)
+    element_at(typedLit(cents.map(_._1)), idx).as("cluster")
   }
 
   /** Nearest-cell assignment as ONE codegen kernel over the flattened

@@ -8,7 +8,9 @@ import graft.queries.SimilarityQueries
 /** The learned IVF quantizer (q97, farthest-first + Lloyd) must not be
   * WORSE than the fixed label quantizer (q33) it replaces: recall@5 of
   * each cluster-restricted search is measured against the q30
-  * brute-force ground truth.
+  * brute-force ground truth. An empty embeddings table must fail the
+  * IVF assignment with a named error, not a bare
+  * `NoSuchElementException`.
   */
 class KmeansRecallSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -39,5 +41,17 @@ class KmeansRecallSpec extends AnyFunSuite {
     val clusters = SimilarityQueries.ivfKmeans(spark, "/root/testdata/sf0.001")
       .select($"cluster").distinct().count()
     assert(clusters > 1, s"degenerate quantizer: $clusters cluster(s) in results")
+  }
+
+  test("IVF assignment (q33, q80, q83, q97) over an empty embeddings table fails with a named error") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_emb").toString
+    Seq.empty[(Long, Seq[Float], Int)].toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    for ((q, build) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
+        "q33" -> SimilarityQueries.ivfSearch, "q80" -> SimilarityQueries.ivfMultiProbe,
+        "q83" -> SimilarityQueries.semanticDedup, "q97" -> SimilarityQueries.ivfKmeans)) {
+      val e = intercept[IllegalArgumentException](build(spark, dir))
+      assert(e.getMessage.contains("the embeddings table is empty"), s"$q: ${e.getMessage}")
+    }
   }
 }

@@ -44,8 +44,8 @@ class ProbeSpec extends AnyFunSuite {
     java.util.Locale.setDefault(java.util.Locale.GERMANY)
     try {
       assert(f"${2.5}%.2f" == "2,50", "the locale under test must use a comma")
-      assert(Probe.json("query" -> "q1", "wall_s" -> 2.5,
-        "wall_1dp" -> Probe.Fixed(2.5, 1), "walls" -> Seq(0.25, 1.0)) ==
+      assert(BenchCore.json("query" -> "q1", "wall_s" -> 2.5,
+        "wall_1dp" -> BenchCore.Fixed(2.5, 1), "walls" -> Seq(0.25, 1.0)) ==
         """{"query":"q1","wall_s":2.50,"wall_1dp":2.5,"walls":[0.25,1.00]}""")
     } finally java.util.Locale.setDefault(saved)
   }

@@ -14,7 +14,7 @@ import graft.operators.Staging
   *
   * The engine's resolution keeps query cores PURE at plan-build time
   * (the BandCapSpec/JaccardCapSpec zero-jobs contract) and pins the
-  * race at the ACTION layer: Bench.runOnce, Verify's dump and
+  * race at the ACTION layer: Bench's execute, Verify's dump and
   * Staging.run all call [[Staging.pinCaches]], which builds each
   * unloaded multi-consumer cache with one sequential job before the
   * consuming action. This spec drives that machinery over EVERY
